@@ -81,16 +81,14 @@ def embedding_dim(df, col: str = "embedding") -> int:
     return int(d)
 
 
-# String operands take the SQL-text fast path (optimization r14,
+# The fixed-width folds are built as SQL text (optimization r14,
 # second segment): building a 64-d unrolled fold through the Column
 # API costs ~6 py4j round trips per element (~2.0 s of pure
 # plan-BUILD time per cosine at d=64, measured), while one F.expr
 # over the equivalent SQL text builds in ~4 ms and parses JVM-side
-# into the IDENTICAL expression tree (same left-fold order, same
-# 0.0D seed, same casts — collect()-equal, asserted by
-# tests/test_vectors_fixed.py). Column operands keep the API loop
-# (no reliable SQL text for an arbitrary Column); every call site in
-# this repo passes SQL text.
+# into the same left-fold expression tree (same 0.0D seed, same
+# casts — asserted against the HOF folds by
+# tests/test_vectors_fixed.py).
 
 
 def dot_fixed_sql(a: str, b: str, d: int) -> str:
@@ -117,55 +115,16 @@ def cosine_fixed_sql(a: str, b: str, d: int) -> str:
     )
 
 
-def dot_fixed(a: Column | str, b: Column | str, d: int) -> Column:
+def dot_fixed(a: str, b: str, d: int) -> Column:
     """Σ aᵢ·bᵢ unrolled over a known width ``d`` — identical values to
-    :func:`dot` (same element-order left fold, 0.0 seed), codegen-able."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(dot_fixed_sql(a, b, d))
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    acc: Column = F.lit(0.0)
-    for i in range(d):
-        acc = acc + _d(a[i]) * _d(b[i])
-    return acc
+    :func:`dot` (same element-order left fold, 0.0 seed), codegen-able.
+    ``a``/``b`` are SQL expressions of array type."""
+    return F.expr(dot_fixed_sql(a, b, d))
 
 
-def norm_sq_fixed(a: Column | str, d: int) -> Column:
-    if isinstance(a, str):
-        return F.expr(norm_sq_fixed_sql(a, d))
-    acc: Column = F.lit(0.0)
-    for i in range(d):
-        acc = acc + _d(a[i]) * _d(a[i])
-    return acc
+def norm_sq_fixed(a: str, d: int) -> Column:
+    return F.expr(norm_sq_fixed_sql(a, d))
 
 
-def cosine_fixed(a: Column | str, b: Column | str, d: int) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(cosine_fixed_sql(a, b, d))
-    return dot_fixed(a, b, d) / F.sqrt(norm_sq_fixed(a, d) * norm_sq_fixed(b, d))
-
-
-def make_cosine_pandas_udf():
-    """Arrow-vectorized scalar pandas_udf cosine — the sanctioned
-    Python fallback when an expression outgrows built-ins (numpy BLAS
-    per batch, one Arrow crossing per ~10k rows instead of per row).
-
-    tests/test_similarity.py asserts it agrees with the JVM fold
-    :func:`cosine` to float64 resolution; the JVM fold stays the
-    default because it needs no Python workers at all.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    # no parameter annotations: this module uses postponed annotations
-    # (PEP 563), which would reach pandas_udf's type-hint inference as
-    # strings and be rejected — the explicit evalType default applies.
-    def _cosine(a, b):
-        am = np.stack(a.to_numpy()).astype("float64")
-        bm = np.stack(b.to_numpy()).astype("float64")
-        dots = np.einsum("ij,ij->i", am, bm)
-        norms = np.linalg.norm(am, axis=1) * np.linalg.norm(bm, axis=1)
-        return pd.Series(dots / norms)
-
-    return pandas_udf(_cosine, "double")
+def cosine_fixed(a: str, b: str, d: int) -> Column:
+    return F.expr(cosine_fixed_sql(a, b, d))

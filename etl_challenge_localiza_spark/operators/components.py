@@ -16,11 +16,12 @@ GraphFrames uses underneath.
 
 from __future__ import annotations
 
-import os
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.localrel import edge_bytes, local_rows, values_table
 
 try:  # pyspark>=3.4 structured errors; fall back for older APIs
     from pyspark.errors import PySparkException
@@ -92,16 +93,6 @@ def iterative_loop_confs(spark, n_rows: int, rows_per_partition: int = 100_000):
                 pass
 
 
-#: edge-count ceiling for the driver-local union-find fast path.
-#: ~16 bytes/edge → ≤ ~8 MB of bounded driver state at the default;
-#: override via $SPARK_GRAFT_CC_LOCAL_EDGES (0 disables). This is a
-#: driver-memory bound, not a machine-width tune: the SAME value is
-#: right on a laptop and a 1000-node cluster, because what it guards
-#: is one bounded collect, and past it the distributed fixpoint loop
-#: (identical results) takes over.
-CC_LOCAL_EDGE_BUDGET = int(os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", "500000"))
-
-
 def _local_components(rows) -> dict:
     """Union-find (path halving + union by size) over an edge list,
     then min-member labeling: node -> min(node id in its component).
@@ -139,7 +130,13 @@ def connected_components(
 ) -> DataFrame:
     """Return (node, component) where component = min node id in the
     connected component. ``edges`` is undirected input (one row per
-    pair, any orientation)."""
+    pair, any orientation).
+
+    Budget: an edge list with integral ids that fits the shared driver
+    budget (``functions.localrel.LOCAL_BUDGET_BYTES``, 16 B per edge)
+    is solved by union-find on the driver; anything larger, and any
+    edge list with non-integral ids, runs the distributed fixpoint.
+    Both give identical labels."""
     # materialize the (already pair-finding-REDUCED) edge list ONCE
     # before symmetrizing: a plain union would embed the upstream
     # pipeline in BOTH branches and Spark recomputes non-identical
@@ -149,53 +146,25 @@ def connected_components(
     e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint(
         eager=True
     )
-    spark_ = edges.sparkSession
-    n_raw = e0.count()
-    if n_raw <= CC_LOCAL_EDGE_BUDGET:
+    spark = edges.sparkSession
+    _n, rows = local_rows(e0, edge_bytes(e0))
+    if rows is not None:
         # SMALL-GRAPH FAST PATH (optimization r14, guide §1.2 step 1):
         # pair finding has already reduced the data by orders of
         # magnitude, and the distributed fixpoint loop costs 3+
         # driver-blocking round trips (join+agg+cache+count each) no
         # matter how tiny the edge list is — measured 1.4 s of pure
-        # dispatch for a 12-edge sf0.1 graph. Below the bounded budget
-        # this path does ONE driver action (collect of the already-
-        # checkpointed, reduced edges) instead of ~6, runs union-find
-        # locally, and ships the labels back as a single createDataFrame
-        # — bit-identical output, strictly less driver involvement.
-        # Past the budget (clone tiers, real 100 TB corpora) the
-        # distributed loop below handles any size.
+        # dispatch for a 12-edge sf0.1 graph. Within the shared driver
+        # budget (functions.localrel) this path collects the
+        # already-checkpointed, reduced edges once, runs union-find
+        # locally, and ships the labels back as one VALUES relation —
+        # bit-identical output, strictly less driver involvement.
         label = _local_components(
-            (r[0], r[1]) for r in e0.collect() if r[0] is not None and r[1] is not None
+            (r[0], r[1]) for r in rows if r[0] is not None and r[1] is not None
         )
-        a_type = e0.schema[0].dataType
-        from pyspark.sql.types import StructField, StructType
-
-        rows = sorted(label.items())
-        type_sql = a_type.simpleString()
-        if type_sql in ("tinyint", "smallint", "int", "bigint") and len(rows) <= 50_000:
-            # (row cap: a VALUES literal is parsed text — fine for the
-            # label maps near-dup graphs produce, wrong for a
-            # budget-sized million-node map, which keeps the RDD path)
-            # integral node ids (every registry graph): ship the label
-            # map as a SQL VALUES LocalRelation — zero jobs and zero
-            # Python worker tasks per consumption, vs one pickled-RDD
-            # task even at the data-sized slice count below
-            # (functions.localrel rationale)
-            from ..functions.localrel import values_table
-
-            return values_table(
-                spark_, rows, f"node {type_sql}, component {type_sql}"
-            )
-        out_schema = StructType(
-            [StructField("node", a_type), StructField("component", a_type)]
-        )
-        # size the local relation's partitioning to the data: the
-        # default (defaultParallelism slices) hands every downstream
-        # consumer 32 near-empty partitions of task dispatch for a
-        # handful of label rows (measured +0.25 s exec on the CC lanes)
-        slices = max(1, min(spark_.sparkContext.defaultParallelism, len(rows) // 50_000))
-        return spark_.createDataFrame(
-            spark_.sparkContext.parallelize(rows, slices), schema=out_schema
+        id_type = e0.schema[0].dataType.simpleString()
+        return values_table(
+            spark, sorted(label.items()), f"node {id_type}, component {id_type}"
         )
     both = e0.union(e0.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct().cache()
     labels = (
@@ -204,7 +173,6 @@ def connected_components(
         .withColumn("component", F.col("node"))
         .cache()
     )
-    spark = edges.sparkSession
     # materialize the edge cache FIRST (under the caller's tuned confs —
     # this runs the full upstream pair-finding pipeline), then size the
     # fixpoint loop to the REDUCED data via the shared policy

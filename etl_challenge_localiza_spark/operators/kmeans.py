@@ -28,17 +28,12 @@ oracle's fixed unrolled CTE sweeps stay bit-equal.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-SCALE = 1_000_000
+from ..functions.localrel import local_rows, values_table
 
-#: vector-count ceiling for the driver-local exact Lloyd fast path —
-#: a driver-memory bound (~64 MB of int64 at d=64), not a machine-width
-#: tune (components.CC_LOCAL_EDGE_BUDGET policy).
-KM_LOCAL_VECS_BUDGET = int(os.environ.get("SPARK_GRAFT_KM_LOCAL_VECS", "100000"))
+SCALE = 1_000_000
 
 
 def _round_half_up(x: float) -> int:
@@ -122,8 +117,6 @@ def _centroid_scalar(spark, cents: list[tuple[int, list[int]]]):
     ``_best(F.col("cents_arr"))`` — the argmin math is unchanged
     (exact int64 dist2, array_min first-min ties), so results are
     bit-identical to the literal path."""
-    from ..functions.localrel import values_table
-
     df = values_table(
         spark,
         [(int(cid), [int(x) for x in vec]) for cid, vec in cents],
@@ -158,26 +151,25 @@ def kmeans_fit(
 ) -> tuple[list[tuple[int, list[int]]], int]:
     """Lloyd iterations from deterministic seeds (the first ``k``
     vectors by vec_id — the IVF seed convention). Returns the final
-    scaled-int centroids and the number of sweeps actually run."""
+    scaled-int centroids and the number of sweeps actually run.
+
+    Budget: a corpus that fits the shared driver budget
+    (``functions.localrel.LOCAL_BUDGET_BYTES``, 8·(d+1) B per
+    vector) runs the same exact-integer Lloyd on the driver, unless
+    its magnitudes are too large for the exact float64 shortcut;
+    anything else runs the distributed sweeps. Both give identical
+    centroids and sweeps_run."""
     vecs = scaled_vectors(emb)
     # bounded-corpus fast path (optimization r14, the CC/pagerank
     # pattern): each distributed sweep costs an assignment job + a
     # k·d collect of driver dispatch no matter how small the corpus.
-    # Below the budget, collect the scaled vectors once and run the
+    # Within the budget, collect the scaled vectors once and run the
     # SAME exact-integer Lloyd locally — bit-identical centroids and
-    # sweep count (pinned by tests/test_kmeans.py). The count probe is
-    # memoized per cached DataFrame, so repeated fits on one table pay
-    # it once per session.
-    n = getattr(emb, "_sg_row_count", None)
-    if n is None:
-        n = emb.count()
-        try:
-            emb._sg_row_count = n
-        except Exception:
-            pass
-    if n <= KM_LOCAL_VECS_BUDGET:
+    # sweep count (pinned by tests/test_kmeans.py).
+    _n, rows = local_rows(vecs, 8 * (F.size("v") + 1))
+    if rows is not None:
         cents_l, sweeps_l = _kmeans_fit_local(
-            [(r["vec_id"], r["v"]) for r in vecs.collect()], k, max_sweeps
+            [(r["vec_id"], r["v"]) for r in rows], k, max_sweeps
         )
         if sweeps_l != -1:
             return cents_l, sweeps_l

@@ -30,20 +30,14 @@ shared :func:`operators.components.iterative_loop_confs` sizing policy
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.localrel import edge_bytes, local_rows, values_table
 from .components import iterative_loop_confs
 
 #: fixed-point scale: ranks are integers in units of 1e-12.
 RANK_SCALE = 1_000_000_000_000
-
-#: edge-count ceiling for the driver-local exact-integer fast path —
-#: a driver-memory bound, not a machine-width tune (see
-#: components.CC_LOCAL_EDGE_BUDGET for the policy rationale).
-PR_LOCAL_EDGE_BUDGET = int(os.environ.get("SPARK_GRAFT_PR_LOCAL_EDGES", "500000"))
 
 
 def pagerank_scaled(
@@ -61,6 +55,12 @@ def pagerank_scaled(
     Returns (ranks, sweeps_run): ranks is a lineage-free (id, r) frame
     (r in units of 1e-12), sweeps_run the number of sweeps actually
     executed (pytest asserts early-stop on pre-converged graphs).
+
+    Budget: an edge list with integral ids that fits the shared driver
+    budget (``functions.localrel.LOCAL_BUDGET_BYTES``, 16 B per edge)
+    is iterated in exact Python integers on the driver; anything
+    larger, and any edge list with non-integral ids, runs the
+    distributed sweeps. Both give identical ranks and sweeps_run.
     """
     spark = edges.sparkSession
     e = edges.cache()  # loop-invariant, referenced by every sweep
@@ -70,25 +70,20 @@ def pagerank_scaled(
         .distinct()
         .cache()
     )
-    n_edges = e.count()
-    if n_edges <= PR_LOCAL_EDGE_BUDGET:
+    n_edges, rows = local_rows(e, edge_bytes(e))
+    if rows is not None:
         # SMALL-GRAPH FAST PATH (optimization r14, same rationale as
         # components.connected_components): each distributed sweep
         # costs 2 joins + an agg + a cache fill + a scalar collect of
-        # driver-blocking dispatch regardless of graph size. Below the
-        # bounded budget, run the sweeps in exact Python integers —
-        # arbitrary precision covers the decimal(38,0) damping
+        # driver-blocking dispatch regardless of graph size. Within the
+        # shared driver budget, run the sweeps in exact Python integers
+        # — arbitrary precision covers the decimal(38,0) damping
         # multiply, and floor-div equals Spark's `div` on the
         # nonnegative ranks — so ranks AND sweeps_run are
         # bit-identical (pinned by tests/test_pagerank.py fastpath
-        # test). Past the budget the distributed loop handles any
-        # size.
-        try:
-            rows = e.collect()
-            out_type = e.schema[0].dataType
-        finally:
-            nodes.unpersist()
-            e.unpersist()
+        # test).
+        nodes.unpersist()
+        e.unpersist()
         adj: dict = {}
         deg: dict = {}
         node_set = set()
@@ -125,19 +120,9 @@ def pagerank_scaled(
                 f"pagerank did not converge in {max_sweeps} sweeps "
                 f"(L1 delta still > {tol_scaled}); raise max_sweeps"
             )
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        out_schema = StructType(
-            [StructField("id", out_type), StructField("r", LongType())]
-        )
-        out_rows = sorted(rank.items())
-        slices = max(
-            1, min(spark.sparkContext.defaultParallelism, len(out_rows) // 50_000)
-        )
+        id_type = e.schema[0].dataType.simpleString()
         return (
-            spark.createDataFrame(
-                spark.sparkContext.parallelize(out_rows, slices), schema=out_schema
-            ),
+            values_table(spark, sorted(rank.items()), f"id {id_type}, r bigint"),
             sweeps_run,
         )
     # fold the loop-invariant out-degree INTO the cached edge list once

@@ -3,8 +3,11 @@ exact-fixpoint early stop, empty-cluster carry-forward."""
 
 from __future__ import annotations
 
+import etl_challenge_localiza_spark.functions.localrel as L
+import etl_challenge_localiza_spark.operators.kmeans as K
 from etl_challenge_localiza_spark.operators.kmeans import (
     SCALE,
+    _kmeans_fit_local,
     kmeans_fit,
     kmeans_summary,
 )
@@ -107,22 +110,36 @@ def test_inertia_nonincreasing_across_sweeps(spark):
     assert inertias[2] > 0
 
 
+def _fit(emb, budget, monkeypatch, **kw):
+    """kmeans_fit under a ``budget``-byte driver budget, plus the
+    sweep count the local Lloyd returned (None when it did not run;
+    -1 when its magnitude guard refused)."""
+    monkeypatch.setattr(L, "LOCAL_BUDGET_BYTES", budget)
+    local = []
+
+    def spy(*args):
+        local.append(_kmeans_fit_local(*args))
+        return local[-1]
+
+    monkeypatch.setattr(K, "_kmeans_fit_local", spy)
+    cents, sweeps = K.kmeans_fit(emb, **kw)
+    return cents, sweeps, (local[0][1] if local else None)
+
+
 def test_local_fastpath_matches_distributed(spark, monkeypatch):
     """r14 bounded local Lloyd must reproduce the distributed sweeps
     bit-for-bit: centroids AND sweeps_run, including empty clusters
     and early stop."""
-    import etl_challenge_localiza_spark.operators.kmeans as K
-
     rows = []
     for i in range(60):
         h = (i * 2654435761 + 11) % 1000
         rows.append((i, [float((h + j * 37) % 97) / 50.0 - 1.0 for j in range(8)]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
-    monkeypatch.setattr(K, "KM_LOCAL_VECS_BUDGET", 10**9)
-    fast_c, fast_s = K.kmeans_fit(emb, k=5, max_sweeps=4)
-    monkeypatch.setattr(K, "KM_LOCAL_VECS_BUDGET", 0)
-    slow_c, slow_s = K.kmeans_fit(emb, k=5, max_sweeps=4)
+    # 60 vectors x 8*(8+1) B: the local Lloyd runs iff the budget fits
+    fast_c, fast_s, fast_local = _fit(emb, 60 * 72, monkeypatch, k=5, max_sweeps=4)
+    slow_c, slow_s, slow_local = _fit(emb, 60 * 72 - 1, monkeypatch, k=5, max_sweeps=4)
+    assert (fast_local, slow_local) == (fast_s, None)
     assert fast_c == slow_c
     assert fast_s == slow_s
 
@@ -130,15 +147,12 @@ def test_local_fastpath_matches_distributed(spark, monkeypatch):
 def test_local_fastpath_magnitude_guard_falls_back(spark, monkeypatch):
     """Coordinates big enough to break float64 exactness must route to
     the distributed path (and still agree with it, trivially)."""
-    import etl_challenge_localiza_spark.operators.kmeans as K
-
     big = 6.0e9  # scaled to 6e15 -> 4*d*m^2 >> 2^53
     emb = spark.createDataFrame(
         [(0, [big, -big]), (1, [-big, big]), (2, [big, big])],
         "vec_id long, embedding array<double>",
     )
-    monkeypatch.setattr(K, "KM_LOCAL_VECS_BUDGET", 10**9)
-    fast_c, fast_s = K.kmeans_fit(emb, k=2, max_sweeps=2)
-    monkeypatch.setattr(K, "KM_LOCAL_VECS_BUDGET", 0)
-    slow_c, slow_s = K.kmeans_fit(emb, k=2, max_sweeps=2)
+    fast_c, fast_s, fast_local = _fit(emb, 10**9, monkeypatch, k=2, max_sweeps=2)
+    slow_c, slow_s, slow_local = _fit(emb, 0, monkeypatch, k=2, max_sweeps=2)
+    assert (fast_local, slow_local) == (-1, None)
     assert fast_c == slow_c and fast_s == slow_s

@@ -62,6 +62,7 @@ def test_fast_path_matches_distributed_loop(spark, monkeypatch):
     """The r14 driver-local exact-integer fast path must reproduce the
     distributed loop bit-for-bit — ranks AND sweeps_run — on an
     irregular multi-component graph."""
+    import etl_challenge_localiza_spark.functions.localrel as L
     import etl_challenge_localiza_spark.operators.pagerank as P
 
     pairs = []
@@ -75,7 +76,7 @@ def test_fast_path_matches_distributed_loop(spark, monkeypatch):
     pairs.append((40, 41))  # dangling-ish extra component
 
     def run(budget):
-        monkeypatch.setattr(P, "PR_LOCAL_EDGE_BUDGET", budget)
+        monkeypatch.setattr(L, "LOCAL_BUDGET_BYTES", budget)
         ranks, sweeps = P.pagerank_scaled(_edges(spark, pairs), max_sweeps=3)
         return sorted((r["id"], r["r"]) for r in ranks.collect()), sweeps
 

@@ -9,8 +9,8 @@ overhead (~0.3-0.5 s of Catalyst/py4j/footer listing) dominates; at
 sf1 the distributed execution does.
 
 Cloning design (volume x10, semantics preserved):
-- lineitem/orders/events: same key/time-offset scheme as
-  tools/relscale_experiment.py — fact grows, dims fixed, join
+- lineitem/orders/events: the key/time-offset scheme of the relscale
+  experiments recorded in PERF.md — fact grows, dims fixed, join
   selectivity and per-key history genuinely grow.
 - documents: doc_id offset per copy; for copies k>0 every token is
   prefixed with a copy tag ("q<k>"), so WITHIN-copy near-dup structure
@@ -224,8 +224,7 @@ def main() -> int:
         )
     )
     # explicit teardown — with the big tier cached the gateway can
-    # keep the process alive after the table prints (same fix as
-    # tools/relscale_r8.py)
+    # keep the process alive after the table prints
     spark.stop()
     return 0
 
