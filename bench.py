@@ -11,8 +11,9 @@ distributed work, comparable across runs.
 The final stdout line is kept COMPACT (required keys + totals) and
 explicitly flushed; full per-query detail (full-call, service-mode,
 per-query duck control) is written to a sidecar JSON
-($SPARK_GRAFT_BENCH_SIDECAR, default BENCH_detail.json beside this
-file) BEFORE the line prints — the old single giant line was twice
+($SPARK_GRAFT_BENCH_SIDECAR, default BENCH_detail_sf<sf>_c<cpus>.json
+beside this file, so runs of different configs keep their own detail)
+BEFORE the line prints — the old single giant line was twice
 truncated mid-write in the driver's tail capture, losing the
 round-over-round PERF pairing (VERDICT r14 #1).
 
@@ -88,7 +89,7 @@ def main() -> int:
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
 
     from etl_challenge_localiza_spark.registry import QUERIES
-    from etl_challenge_localiza_spark.session import get_spark
+    from etl_challenge_localiza_spark.session import DEFAULT_CPUS, get_spark
 
     spark = get_spark(app_name="bench")
 
@@ -173,7 +174,10 @@ def main() -> int:
     }
     sidecar = os.environ.get(
         "SPARK_GRAFT_BENCH_SIDECAR",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_detail.json"),
+        os.path.join(
+            os.path.dirname(os.path.abspath(__file__)),
+            f"BENCH_detail_sf{sf:g}_c{DEFAULT_CPUS}.json",
+        ),
     )
     try:
         with open(sidecar, "w") as f:

@@ -24,10 +24,15 @@ from pyspark.sql import functions as F
 NULL_TOKENS = ("", "nan", "None")
 
 
+def normalize_name(name: str) -> str:
+    """P1 on one column name: ``strip().lower().replace(" ", "_")``
+    (flows/pipeline.py:118)."""
+    return name.strip().lower().replace(" ", "_")
+
+
 def normalize_column_names(df: DataFrame) -> DataFrame:
-    """P1: ``strip().lower().replace(" ", "_")`` on every column name
-    (flows/pipeline.py:118). Pure metadata — no job runs."""
-    return df.toDF(*[c.strip().lower().replace(" ", "_") for c in df.columns])
+    """P1 on every column name. Pure metadata — no job runs."""
+    return df.toDF(*[normalize_name(c) for c in df.columns])
 
 
 def clean_string(

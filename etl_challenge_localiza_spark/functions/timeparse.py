@@ -9,13 +9,15 @@ Reference (flows/pipeline.py:25-37,130-141):
 - Numeric path: to_datetime(value, unit, utc); string path:
   to_datetime(value, errors="coerce", utc).
 
-Spark-first shape: unit detection is inherently a 2-pass, data-dependent
-decision, so it is a tiny driver-side aggregate (ONE job computing the
-median) followed by a single declarative cast — not a UDF. At 100 TB
-the median pass reads only the one column (column pruning) and the
-thresholds are decades apart, so ``median`` could be swapped for
-``percentile_approx`` with no behavior change; we keep exact median for
-bit-parity with the reference.
+Spark-first shape: the numeric-vs-string test and the unit are a
+data-dependent decision, so they come from ONE aggregate over the
+column (:func:`unit_probe`: the count of values failing the regex plus
+the approximate median) followed by a single declarative cast — not a
+UDF. The probe's two columns are plain aggregates, so a caller that
+already scans the same rows (the pipeline's pre-gate DQ profile) can
+carry them in that pass and hand the decision to
+:func:`parse_timestamp_auto`, which then runs no job at all. At 100 TB
+the probe reads only the one column (column pruning).
 """
 
 from __future__ import annotations
@@ -28,6 +30,40 @@ EPOCH_DIVISORS = {"s": 1.0, "ms": 1e3, "us": 1e6, "ns": 1e9}
 
 #: the reference's all-digits test (flows/pipeline.py:133).
 NUMERIC_RE = r"^\d+(\.\d+)?$"
+
+#: the route :func:`parse_timestamp_auto` takes for non-numeric columns;
+#: the epoch route is named by its unit ("s", "ms", "us", "ns").
+STRING_ROUTE = "string"
+
+_NUMERIC_DTYPES = ("tinyint", "smallint", "int", "bigint", "float", "double")
+
+
+def _numeric_by_dtype(dtype: str) -> bool | None:
+    """P6 decided by the dtype alone; None when the values decide."""
+    if dtype in _NUMERIC_DTYPES or dtype.startswith("decimal"):
+        return True
+    if dtype.startswith("timestamp") or dtype == "date":
+        return False
+    return None
+
+
+def _median_abs(col: str) -> Column:
+    """P5's median(abs(value)), as ``approx_percentile`` (see
+    :func:`detect_timestamp_unit`)."""
+    return F.expr(f"approx_percentile(abs(try_cast(`{col}` as double)), 0.5, 10000)")
+
+
+def _unit_for_median(m: float | None) -> str:
+    """P5 thresholds exactly 1e17/1e14/1e11 (strict >); no value → "s"."""
+    if m is None:
+        return "s"
+    if m > 1e17:
+        return "ns"
+    if m > 1e14:
+        return "us"
+    if m > 1e11:
+        return "ms"
+    return "s"
 
 
 def detect_timestamp_unit(df: DataFrame, col: str = "timestamp") -> str:
@@ -47,21 +83,7 @@ def detect_timestamp_unit(df: DataFrame, col: str = "timestamp") -> str:
     a decade boundary at its median — mixed-unit data on which no
     single unit is right anyway. Small inputs (< accuracy) are exact,
     so reference parity on the pytest fixtures is bit-for-bit."""
-    row = df.select(
-        F.expr(
-            f"approx_percentile(abs(try_cast(`{col}` as double)), 0.5, 10000)"
-        ).alias("m")
-    ).first()
-    m = row["m"] if row is not None else None
-    if m is None:
-        return "s"
-    if m > 1e17:
-        return "ns"
-    if m > 1e14:
-        return "us"
-    if m > 1e11:
-        return "ms"
-    return "s"
+    return _unit_for_median(df.select(_median_abs(col).alias("m")).first()["m"])
 
 
 def looks_numeric(df: DataFrame, col: str = "timestamp") -> bool:
@@ -74,14 +96,36 @@ def looks_numeric(df: DataFrame, col: str = "timestamp") -> bool:
     dtype = dict(df.dtypes).get(col)
     if dtype is None:
         return False
-    if dtype in ("tinyint", "smallint", "int", "bigint", "float", "double") or dtype.startswith(
-        "decimal"
-    ):
-        return True
-    if dtype.startswith("timestamp") or dtype in ("date",):
-        return False
+    by_dtype = _numeric_by_dtype(dtype)
+    if by_dtype is not None:
+        return by_dtype
     c = F.col(col)
     return df.filter(c.isNotNull() & ~c.cast("string").rlike(NUMERIC_RE)).isEmpty()
+
+
+def unit_probe(col: str = "timestamp") -> list[Column]:
+    """P5 + P6 as two aggregate columns over ``col``: ``ts_non_numeric``
+    (non-null values failing :data:`NUMERIC_RE`; 0 ⇔ :func:`looks_numeric`
+    for string columns) and ``ts_median_abs`` (the median
+    :func:`detect_timestamp_unit` uses). Evaluate them in any aggregate
+    or ``Observation`` over the rows that will be parsed, then pass
+    :func:`unit_from_probe`'s route to :func:`parse_timestamp_auto`."""
+    c = F.col(col)
+    return [
+        F.count(F.when(c.isNotNull() & ~c.cast("string").rlike(NUMERIC_RE), F.lit(1)))
+        .alias("ts_non_numeric"),
+        _median_abs(col).alias("ts_median_abs"),
+    ]
+
+
+def unit_from_probe(dtype: str, probe) -> str:
+    """The parse route from :func:`unit_probe`'s values (a Row or dict):
+    an epoch unit when the column looks numeric, else
+    :data:`STRING_ROUTE`."""
+    numeric = _numeric_by_dtype(dtype)
+    if numeric is None:
+        numeric = probe["ts_non_numeric"] == 0
+    return _unit_for_median(probe["ts_median_abs"]) if numeric else STRING_ROUTE
 
 
 def parse_epoch(col: Column | str, unit: str) -> Column:
@@ -132,8 +176,15 @@ def parse_timestamp_string(col: Column | str) -> Column:
     return F.when(F.unix_micros(ts).between(lo, hi - 1), ts)
 
 
-def parse_timestamp_auto(df: DataFrame, col: str = "timestamp") -> DataFrame:
+def parse_timestamp_auto(
+    df: DataFrame, col: str = "timestamp", route: str | None = None
+) -> DataFrame:
     """P5-P9 composed: detect numeric-vs-string, detect unit, parse.
+
+    ``route`` is :func:`unit_from_probe`'s decision when the caller has
+    already aggregated :func:`unit_probe` over these rows; None runs
+    the probe here as ONE aggregate job (none for dtypes that decide
+    alone: timestamps, dates).
 
     Missing column → all-NULL timestamp column (P9,
     flows/pipeline.py:140-141). Returns a new DataFrame with ``col``
@@ -144,7 +195,12 @@ def parse_timestamp_auto(df: DataFrame, col: str = "timestamp") -> DataFrame:
     dtype = dict(df.dtypes)[col]
     if dtype.startswith("timestamp"):
         return df  # already parsed
-    if looks_numeric(df, col):
-        unit = detect_timestamp_unit(df, col)
-        return df.withColumn(col, parse_epoch(F.col(col), unit))
-    return df.withColumn(col, parse_timestamp_string(F.col(col)))
+    if route is None:
+        route = (
+            STRING_ROUTE
+            if _numeric_by_dtype(dtype) is False
+            else unit_from_probe(dtype, df.agg(*unit_probe(col)).first())
+        )
+    if route == STRING_ROUTE:
+        return df.withColumn(col, parse_timestamp_string(F.col(col)))
+    return df.withColumn(col, parse_epoch(F.col(col), route))

@@ -6,7 +6,9 @@ transformation chain; Catalyst fuses every per-column expression into a
 single whole-stage-codegen pass over the scan, so the entire clean
 stage is one read of the data regardless of how many rules it applies.
 Only the epoch-unit detection (data-dependent, see functions.timeparse)
-forces a tiny extra aggregate job on the one timestamp column.
+needs an aggregate over the one timestamp column: a caller that already
+scanned the raw rows passes its route in, otherwise it runs here as one
+tiny job.
 """
 
 from __future__ import annotations
@@ -33,7 +35,11 @@ def numeric_coerce(col: str) -> F.Column:
     return F.nanvl(c, F.lit(None).cast("double"))
 
 
-def clean_transactions(df: DataFrame, deterministic_order_col: str | None = None) -> DataFrame:
+def clean_transactions(
+    df: DataFrame,
+    deterministic_order_col: str | None = None,
+    timestamp_route: str | None = None,
+) -> DataFrame:
     """Full clean/standardize pass (flows/pipeline.py:112-160).
 
     Steps (each cites the reference line it reproduces):
@@ -56,6 +62,10 @@ def clean_transactions(df: DataFrame, deterministic_order_col: str | None = None
     ``dropDuplicates`` (any one row per key — the reference's effective
     guarantee under parallelism, and shuffle-cheaper: map-side partial
     dedup before the exchange).
+
+    ``timestamp_route``: step 5's decision, from
+    ``functions.timeparse.unit_from_probe`` over these rows' raw
+    timestamp column; None probes here (see ``parse_timestamp_auto``).
     """
     df = normalize_column_names(df)
 
@@ -68,7 +78,7 @@ def clean_transactions(df: DataFrame, deterministic_order_col: str | None = None
             "location_region", clean_string("location_region", extra_null_tokens=("0",))
         )
 
-    df = parse_timestamp_auto(df, "timestamp")
+    df = parse_timestamp_auto(df, "timestamp", timestamp_route)
 
     if "amount" in df.columns:
         df = df.withColumn("amount", numeric_coerce("amount"))

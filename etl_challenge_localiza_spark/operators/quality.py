@@ -24,7 +24,7 @@ from __future__ import annotations
 import os
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .cleaning import numeric_coerce
@@ -53,35 +53,39 @@ class QualityGateError(RuntimeError):
     """Raised when a conformity gate fails (flows/pipeline.py:245,259)."""
 
 
-def _null_count(col: str) -> F.Column:
-    return F.count(F.when(F.col(col).isNull(), F.lit(1))).cast("long")
-
-
-def dq_profile(df: DataFrame) -> dict:
-    """A2-A6 in a single aggregate pass; returns the reference's exact
-    metrics dict shape (flows/pipeline.py:53-64)."""
+def profile_aggs(df: DataFrame) -> list[Column]:
+    """The A2-A6 aggregate columns of one profile pass: ``total_rows``,
+    ``nulls_<col>`` per present :data:`PROFILE_COLUMNS` entry and
+    ``violations_amount_non_negative``. Plain aggregates, so they run
+    as a ``df.agg`` or ride another action as an ``Observation``."""
     cols = set(df.columns)
-    # DQ-pre type nuance: coerce amount only (flows/pipeline.py:100-101).
+    amount = F.col("amount")
+    # DQ type nuance: coerce amount only (flows/pipeline.py:100-101).
     if "amount" in cols:
         amount_dtype = dict(df.dtypes)["amount"]
         if amount_dtype not in ("double", "float") and not amount_dtype.startswith("decimal"):
-            df = df.withColumn("amount", numeric_coerce("amount"))
+            amount = numeric_coerce("amount")
 
-    aggs = [F.count(F.lit(1)).cast("long").alias("__total")]
+    def count_if(cond: Column) -> Column:
+        return F.count(F.when(cond, F.lit(1))).cast("long")
+
+    aggs = [F.count(F.lit(1)).cast("long").alias("total_rows")]
     for c in PROFILE_COLUMNS:
         if c in cols:
-            aggs.append(_null_count(c).alias(f"nulls__{c}"))
+            value = amount if c == "amount" else F.col(c)
+            aggs.append(count_if(value.isNull()).alias(f"nulls_{c}"))
     if "amount" in cols:
-        aggs.append(
-            F.count(F.when(F.col("amount") < 0, F.lit(1))).cast("long").alias("__amount_neg")
-        )
+        aggs.append(count_if(amount < 0).alias("violations_amount_non_negative"))
+    return aggs
 
-    row = df.agg(*aggs).first().asDict()
-    total = int(row["__total"])
 
+def profile_metrics(row: dict) -> dict:
+    """The reference's exact metrics dict (flows/pipeline.py:53-64,89)
+    from the values of one :func:`profile_aggs` pass."""
+    total = int(row["total_rows"])
     metrics: dict = {
         "total_rows": total,
-        "nulls": {},
+        "nulls": {c: int(row[f"nulls_{c}"]) for c in PROFILE_COLUMNS if f"nulls_{c}" in row},
         "rules": {
             "timestamp_not_null": None,
             "transaction_type_not_null": None,
@@ -91,18 +95,14 @@ def dq_profile(df: DataFrame) -> dict:
         "failed_rows_estimate": None,
         "conformity_rate": None,
     }
-    for c in PROFILE_COLUMNS:
-        if c in cols:
-            metrics["nulls"][c] = int(row[f"nulls__{c}"])
-
     fails = 0
     for rule, c in NOT_NULL_RULES:
-        if c in cols:
-            violated = int(row[f"nulls__{c}"])
+        if c in metrics["nulls"]:
+            violated = metrics["nulls"][c]
             metrics["rules"][rule] = {"violations": violated}
             fails += violated
-    if "amount" in cols:
-        violated = int(row["__amount_neg"])
+    if "violations_amount_non_negative" in row:
+        violated = int(row["violations_amount_non_negative"])
         metrics["rules"]["amount_non_negative"] = {"violations": violated}
         fails += violated
 
@@ -112,35 +112,22 @@ def dq_profile(df: DataFrame) -> dict:
     return metrics
 
 
+def dq_profile(df: DataFrame) -> dict:
+    """A2-A6 in a single aggregate pass; returns the reference's exact
+    metrics dict shape (flows/pipeline.py:53-64)."""
+    return profile_metrics(df.agg(*profile_aggs(df)).first().asDict())
+
+
 def dq_profile_df(df: DataFrame) -> DataFrame:
     """The A2-A6 profile as a 1-row DataFrame (flat column names), for
     SQL-oracle comparison. Same single-pass aggregate as
     :func:`dq_profile`; conformity arithmetic is done in the plan with
     the exact reference formula (flows/pipeline.py:89).
     """
-    cols = set(df.columns)
-    if "amount" in cols:
-        amount_dtype = dict(df.dtypes)["amount"]
-        if amount_dtype not in ("double", "float") and not amount_dtype.startswith("decimal"):
-            df = df.withColumn("amount", numeric_coerce("amount"))
-
-    aggs = [F.count(F.lit(1)).cast("long").alias("total_rows")]
-    for c in PROFILE_COLUMNS:
-        if c in cols:
-            aggs.append(_null_count(c).alias(f"nulls_{c}"))
-    if "amount" in cols:
-        aggs.append(
-            F.count(F.when(F.col("amount") < 0, F.lit(1)))
-            .cast("long")
-            .alias("violations_amount_non_negative")
-        )
-    agg = df.agg(*aggs)
-
-    fail_cols = [
-        f"nulls_{c}" for _, c in NOT_NULL_RULES if c in cols
-    ] + (["violations_amount_non_negative"] if "amount" in cols else [])
+    agg = df.agg(*profile_aggs(df))
+    fail_cols = [f"nulls_{c}" for _, c in NOT_NULL_RULES] + ["violations_amount_non_negative"]
     fails = None
-    for fc in fail_cols:
+    for fc in (c for c in fail_cols if c in agg.columns):
         fails = F.col(fc) if fails is None else fails + F.col(fc)
     fails = fails if fails is not None else F.lit(0).cast("long")
     return agg.withColumn("failed_rows_estimate", fails.cast("long")).withColumn(
@@ -155,26 +142,23 @@ def dq_profile_df(df: DataFrame) -> DataFrame:
 
 
 def observed_profile(df: DataFrame, name: str = "dq") -> DataFrame:
-    """Zero-extra-pass DQ telemetry via ``DataFrame.observe``: the
-    metrics accumulate DURING whatever action consumes the returned
-    frame (a write, a count), instead of costing a separate scan.
+    """Zero-extra-pass DQ profile via ``DataFrame.observe``: the
+    :func:`profile_aggs` columns accumulate DURING whatever action
+    consumes the returned frame (a write, a count), instead of costing
+    a separate scan. After that action, ``profile_metrics(
+    observed._dq_observation.get)`` is exactly :func:`dq_profile` of
+    ``df``.
 
-    Use for monitoring alongside a sink; the gating profile
-    (:func:`dq_profile`) stays a dedicated action because the gate must
-    decide BEFORE the publish runs (flows/pipeline.py:235). Read the
-    result from ``spark.listenerBus`` observations or
-    ``df.observe``'s QueryExecutionListener; in tests, via
-    ``Observation`` objects.
+    This fits a gate that runs after its sink, such as the pipeline's
+    post gate, whose failure still publishes (flows/pipeline.py:256-261).
+    The pre gate must decide BEFORE anything is written
+    (flows/pipeline.py:235), so it stays a dedicated :func:`dq_profile`
+    action.
     """
     from pyspark.sql import Observation
 
     obs = Observation(name)
-    cols = set(df.columns)
-    aggs = [F.count(F.lit(1)).alias("total_rows")]
-    for c in PROFILE_COLUMNS:
-        if c in cols:
-            aggs.append(_null_count(c).alias(f"nulls_{c}"))
-    observed = df.observe(obs, *aggs)
+    observed = df.observe(obs, *profile_aggs(df))
     observed._dq_observation = obs  # handle for the caller
     return observed
 

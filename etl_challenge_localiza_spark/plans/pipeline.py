@@ -6,11 +6,23 @@ ingest → DQ pre → gate (raw snapshot + fail) → clean → DQ post → gate
 (docker-compose.yml:17); plain driver control flow is the Spark
 equivalent — actions fire exactly at the two gates and the sinks.
 
-Scale note (SURVEY.md §3.4): the raw frame is consumed twice (DQ-pre
-action, clean stage) and the clean frame twice (DQ-post action,
-publish), so both are cached at those fan-out points; at cluster scale
-swap ``cache()`` for ``persist(DISK_ONLY)`` or a staging-table write if
-executors can't hold the batch.
+Three data passes, nothing cached (SURVEY.md §3.4):
+
+1. the pre-gate aggregate over the CSV scan: the DQ profile plus the
+   timestamp probe (``functions.timeparse.unit_probe``), which rides
+   the same job as an ``Observation``, so cleaning needs no job of its
+   own to pick the epoch unit;
+2. clean → dedup → staging parquet, with the post-gate profile observed
+   on that write (``observed_profile``). The reference publishes the
+   staging table on both post-gate branches, so writing it before the
+   gate changes no outcome;
+3. the curated exports, read back from the staging parquet as the
+   reference reads its DuckDB staging table, so both CSVs come from
+   exactly the rows ``dropDuplicates`` kept there.
+
+The raw CSV is scanned twice (passes 1 and 2) instead of being cached:
+the re-scan is cheaper than filling and reading a cache at this size
+and is the shape that still works when no executor can hold the batch.
 """
 
 from __future__ import annotations
@@ -18,8 +30,10 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Observation, SparkSession
 
+from ..functions.cleaning import normalize_name
+from ..functions.timeparse import unit_from_probe, unit_probe
 from ..operators.analytics import last_sale_per_address, region_risk_avg, top3_recent_sales
 from ..operators.cleaning import clean_transactions
 from ..operators.quality import (
@@ -27,6 +41,8 @@ from ..operators.quality import (
     MIN_CONFORMITY_PRE,
     QualityGateError,
     dq_profile,
+    observed_profile,
+    profile_metrics,
 )
 from ..sources.readers import read_transactions_csv
 from ..sources.sinks import write_json_metrics, write_single_csv
@@ -72,9 +88,13 @@ def run_pipeline(
             f"Input not found at {input_csv}. Place the CSV or set INPUT_CSV."
         )
 
-    df_raw = read_transactions_csv(spark, input_csv).cache()
+    df_raw = read_transactions_csv(spark, input_csv)
+    # the raw header that cleaning renames to "timestamp" (P1)
+    ts_col = next((c for c in df_raw.columns if normalize_name(c) == "timestamp"), None)
+    probe = Observation("timestamp_probe")
+    probed = df_raw if ts_col is None else df_raw.observe(probe, *unit_probe(ts_col))
 
-    dq_pre = dq_profile(df_raw)
+    dq_pre = dq_profile(probed)
     write_json_metrics(dq_pre, os.path.join(data_dir, "dq_metrics_pre.json"), phase="pre_clean")
     result = PipelineResult(dq_pre=dq_pre)
 
@@ -90,27 +110,29 @@ def run_pipeline(
         err.result = result  # expose artifacts to the caller, as the
         raise err  # reference does by leaving files on disk
 
-    df_clean = clean_transactions(df_raw).cache()
+    route = None if ts_col is None else unit_from_probe(dict(df_raw.dtypes)[ts_col], probe.get)
+    staged = observed_profile(clean_transactions(df_raw, timestamp_route=route), "dq_post")
+    stg = os.path.join(data_dir, "stg_transactions.parquet")
+    staged.write.mode("overwrite").parquet(stg)
+    result.outputs["stg_transactions"] = stg
 
-    dq_post = dq_profile(df_clean)
+    dq_post = profile_metrics(staged._dq_observation.get)
     write_json_metrics(dq_post, os.path.join(data_dir, "dq_metrics_post.json"), phase="post_clean")
     result.dq_post = dq_post
 
-    def publish() -> None:
-        stg = os.path.join(data_dir, "stg_transactions.parquet")
-        df_clean.write.mode("overwrite").parquet(stg)
-        result.outputs["stg_transactions"] = stg
-        rra = region_risk_avg(df_clean)
-        result.outputs["region_risk_avg"] = write_single_csv(
-            rra, os.path.join(curated_dir, "region_risk_avg.csv")
-        )
-        top3 = top3_recent_sales(last_sale_per_address(df_clean))
-        result.outputs["top3_recent_sales_by_receiving"] = write_single_csv(
-            top3, os.path.join(curated_dir, "top3_recent_sales_by_receiving.csv")
-        )
+    # The curated exports go out on both post-gate branches:
+    # publish-then-raise (flows/pipeline.py:256-261). The known schema
+    # spares the footer-reading job of schema inference.
+    df_stg = spark.read.schema(staged.schema).parquet(stg)
+    result.outputs["region_risk_avg"] = write_single_csv(
+        region_risk_avg(df_stg), os.path.join(curated_dir, "region_risk_avg.csv")
+    )
+    result.outputs["top3_recent_sales_by_receiving"] = write_single_csv(
+        top3_recent_sales(last_sale_per_address(df_stg)),
+        os.path.join(curated_dir, "top3_recent_sales_by_receiving.csv"),
+    )
 
     if dq_post["conformity_rate"] is not None and dq_post["conformity_rate"] < post_thresh:
-        publish()  # publish-then-raise (flows/pipeline.py:256-261)
         result.failed_gate = "post"
         err = QualityGateError(
             f"Conformity POST ({dq_post['conformity_rate']:.4f}) < {post_thresh} — "
@@ -118,10 +140,6 @@ def run_pipeline(
         )
         err.result = result
         raise err
-
-    publish()
-    df_raw.unpersist()
-    df_clean.unpersist()
     return result
 
 
